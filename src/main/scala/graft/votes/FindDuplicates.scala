@@ -87,7 +87,9 @@ object FindDuplicates {
     * old→new mapping is well-defined.
     */
   def mergeGroups(pairs: DataFrame): Seq[Merge] = {
-    val rows = pairs.orderBy("id1", "id2").collect()
+    // the pairs are collected whole, so sort them here: a global orderBy
+    // would add a range-sampling job and a shuffle; (id1, id2) is unique
+    val rows = pairs.collect().sortBy(r => (r.getLong(0), r.getLong(1)))
     val parent = collection.mutable.Map[Long, Long]()
     def find(x: Long): Long = {
       val p = parent.getOrElse(x, x)

@@ -3,7 +3,8 @@ package graft.votes
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+
+import scala.jdk.CollectionConverters._
 
 /** Entity resolution: link free-text voter names on roll calls to canonical
   * member records (reference: match_names.py:13-47 pass 1,
@@ -18,6 +19,14 @@ import org.apache.spark.sql.types._
   * Pass 2 is the reference's inherently iterative substring fixed point,
   * run on the driver over the (small) per-group residue of pass 1, exactly
   * matching the reference's scale assumptions (SURVEY.md §7 risk 3).
+  *
+  * [[run]] evaluates the pass-1 plan once: its rows are collected to the
+  * driver, both residues anti-join against that local relation, and the
+  * pass-2 hits are subtracted from the residues on the driver. Every frame
+  * of the returned [[Result]] is a driver-local relation, so reading it —
+  * in [[applyMatches]], [[stats]] or [[ambiguityReport]] — never re-runs
+  * pass 1. `maxResidue` caps each driver-side collect: the pass-1 rows and
+  * both residues.
   */
 object MatchNames {
 
@@ -33,17 +42,17 @@ object MatchNames {
   final case class Result(matches: DataFrame, missingNames: DataFrame,
                           unmatchedMembers: DataFrame)
 
-  /** @param voterNames distinct voter names: (year, chamber, name)
-    * @param roster     members serving: (year, chamber, member_id, first,
-    *                   middle, last, suffix) — nulls allowed in name parts
-    * @return matches (year, chamber, name, member_id, method), plus the
-    *         unmatched residue on both sides
+  /** Hard cap on the rows [[run]] pulls to the driver: pass-1 matches and
+    * each pass-1 residue.
     */
-  /** Hard cap on pass-2 residue rows pulled to the driver; see [[run]]. */
   val DefaultMaxResidue = 100000
 
-  def run(spark: SparkSession, voterNames: DataFrame, roster: DataFrame,
-          maxResidue: Int = DefaultMaxResidue): Result = {
+  /** Pass 1 as a plan: (year, chamber, name, member_id, method = "fuzzy"),
+    * one row per voter name with exactly one matching name tuple in its
+    * block. Exposed so specs can inspect the join shape; [[run]] evaluates
+    * it once.
+    */
+  private[votes] def pass1(voterNames: DataFrame, roster: DataFrame): DataFrame = {
     val probes = voterNames
       .withColumn("_p", parseProbe(col("name")))
       .withColumn("_block", lower(col("_p._3")))
@@ -78,52 +87,70 @@ object MatchNames {
       .withColumn("_hit",
         when(col("_n_last") === 1, col("_hit_single")).otherwise(col("_hit_multi")))
 
-    val fuzzyMatches = joined
+    joined
       .groupBy("year", "chamber", "name")
       .agg(min(when(col("_hit"), col("member_id"))).as("member_id"),
         countDistinct(when(col("_hit"), col("_ntuple"))).as("_n_hits"))
       .filter(col("_n_hits") === 1)
       .select(col("year"), col("chamber"), col("name"), col("member_id"),
         lit("fuzzy").as("method"))
+  }
 
-    // ---- residue after pass 1
-    val missing1 = voterNames.join(fuzzyMatches, Seq("year", "chamber", "name"), "left_anti")
-    val unmatched1 = roster.join(
-      fuzzyMatches.select(col("year"), col("chamber"), col("member_id")),
+  /** @param voterNames distinct voter names: (year, chamber, name)
+    * @param roster     members serving: (year, chamber, member_id, first,
+    *                   middle, last, suffix) — nulls allowed in name parts
+    * @return matches (year, chamber, name, member_id, method), plus the
+    *         unmatched residue on both sides (`missingNames` keeps the
+    *         columns of `voterNames`, `unmatchedMembers` those of `roster`).
+    *         All three are driver-local relations: reading them launches no
+    *         job.
+    */
+  def run(spark: SparkSession, voterNames: DataFrame, roster: DataFrame,
+          maxResidue: Int = DefaultMaxResidue): Result = {
+    // Pass-1 rows are bounded by the distinct voter names; the residues are
+    // per-group tiny unless pass 1 has degraded (e.g. a broken blocking key
+    // matching nothing). head(cap+1) bounds driver memory either way, and
+    // the require fails loudly with a diagnosis instead of OOMing.
+    def capped(df: DataFrame, what: String, why: String): Array[Row] = {
+      val rows = df.head(maxResidue + 1)
+      require(rows.length <= maxResidue,
+        s"MatchNames $what exceeds $maxResidue rows — $why; refusing the " +
+          "driver-side fixed point")
+      rows
+    }
+    val degraded = "pass 1 has degraded (check the blocking key / roster join)"
+    val fuzzy = pass1(voterNames, roster)
+    val fuzzyRows = capped(fuzzy, "pass 1: matched voter names",
+      "there are more distinct voter names than the cap allows")
+    val fuzzyLocal = spark.createDataFrame(fuzzyRows.toSeq.asJava, fuzzy.schema)
+
+    // ---- residue after pass 1; the roster side also carries the pass-2 key,
+    // computed by Spark's `upper` next to the full roster row
+    val missing1Df = voterNames.join(fuzzyLocal, Seq("year", "chamber", "name"), "left_anti")
+    val unmatched1Df = roster.join(fuzzyLocal.select("year", "chamber", "member_id"),
       Seq("year", "chamber", "member_id"), "left_anti")
+    val missing1 = capped(missing1Df,
+      "pass 2: unmatched voter-name residue", degraded)
+    val unmatched1 = capped(
+      unmatched1Df.withColumn("_last_u", upper(coalesce(col("last"), lit("")))),
+      "pass 2: unmatched roster residue", degraded)
 
     // ---- pass 2: substring fixed point on the driver (match_names.py:139-156).
-    // The residue is per-group tiny under the reference's data model, but a
-    // degraded pass 1 (e.g. a broken blocking key matching nothing) would
-    // make these collects unbounded — head(cap+1) bounds driver memory and
-    // the require fails loudly with a diagnosis instead of OOMing.
-    val missingRows = missing1.select("year", "chamber", "name").head(maxResidue + 1)
-    require(missingRows.length <= maxResidue,
-      s"MatchNames pass 2: unmatched voter-name residue exceeds $maxResidue rows — " +
-        "pass 1 has degraded (check the blocking key / roster join); refusing " +
-        "the driver-side fixed point")
-    val unmatchedRows = unmatched1
-      .select(col("year"), col("chamber"), col("member_id"),
-        upper(coalesce(col("last"), lit(""))).as("last_u"))
-      .head(maxResidue + 1)
-    require(unmatchedRows.length <= maxResidue,
-      s"MatchNames pass 2: unmatched roster residue exceeds $maxResidue rows — " +
-        "pass 1 has degraded (check the blocking key / roster join); refusing " +
-        "the driver-side fixed point")
-
+    // A USING join puts its keys first, so the residue rows start with
+    // (year, chamber, name) and (year, chamber, member_id); `_last_u` is last.
+    def group(r: Row) = (r.getInt(0), r.getInt(1))
+    val lastU = unmatched1Df.schema.length
     val extra = Vector.newBuilder[Row]
-    val groups = (missingRows.map(r => (r.getInt(0), r.getInt(1))) ++
-      unmatchedRows.map(r => (r.getInt(0), r.getInt(1)))).distinct
-    // group the residue once; the previous shape rescanned both arrays per
-    // (year, chamber)
-    val missingByGroup = missingRows.toIndexedSeq.groupBy(r => (r.getInt(0), r.getInt(1)))
-    val unmatchedByGroup = unmatchedRows.toIndexedSeq.groupBy(r => (r.getInt(0), r.getInt(1)))
+    val groups = (missing1.map(group) ++ unmatched1.map(group)).distinct
+    val missingByGroup = missing1.toIndexedSeq.groupBy(group)
+    val unmatchedByGroup = unmatched1.toIndexedSeq.groupBy(group)
     for ((y, c) <- groups) {
       val missingNames = collection.mutable.LinkedHashSet[String](
         missingByGroup.getOrElse((y, c), IndexedSeq.empty).map(_.getString(2)): _*)
       val unmatchedByLast = collection.mutable.LinkedHashMap[String, List[Long]]()
       for (r <- unmatchedByGroup.getOrElse((y, c), IndexedSeq.empty))
-        unmatchedByLast(r.getString(3)) = unmatchedByLast.getOrElse(r.getString(3), Nil) :+ r.getLong(2)
+        unmatchedByLast(r.getString(lastU)) =
+          unmatchedByLast.getOrElse(r.getString(lastU), Nil) :+ r.getLong(2)
 
       var changed = true
       while (changed) {
@@ -144,19 +171,19 @@ object MatchNames {
       }
     }
 
-    val extraSchema = StructType(Seq(
-      StructField("year", IntegerType), StructField("chamber", IntegerType),
-      StructField("name", StringType), StructField("member_id", LongType),
-      StructField("method", StringType)))
-    val extraDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(extra.result().toSeq), extraSchema)
+    // ---- residue after pass 2: the pass-1 residues minus the pass-2 hits
+    val substring = extra.result()
+    def key(r: Row) = (r.getInt(0), r.getInt(1), r.get(2))
+    val hitNames = substring.map(key).toSet
+    val hitMembers = substring.map(r => (r.getInt(0), r.getInt(1), r.get(3))).toSet
+    val missing = missing1.filterNot(r => hitNames(key(r)))
+    val unmatched = unmatched1.filterNot(r => hitMembers(key(r)))
+      .map(r => Row.fromSeq(r.toSeq.take(lastU)))
 
-    val matches = fuzzyMatches.unionByName(extraDf)
     Result(
-      matches,
-      missing1.join(matches, Seq("year", "chamber", "name"), "left_anti"),
-      unmatched1.join(matches.select("year", "chamber", "member_id"),
-        Seq("year", "chamber", "member_id"), "left_anti"))
+      spark.createDataFrame((fuzzyRows ++ substring).toSeq.asJava, fuzzy.schema),
+      spark.createDataFrame(missing.toSeq.asJava, missing1Df.schema),
+      spark.createDataFrame(unmatched.toSeq.asJava, unmatched1Df.schema))
   }
 
   /** Per-group resolution stats with the reference's integer-floor percent
@@ -220,16 +247,20 @@ object MatchNames {
 
   /** Write-back (S9, match_names.py:168-188): fill votes.member_id from the
     * matches, but only for (year, chamber) groups that resolved completely
-    * (zero missing names AND zero unmatched members).
+    * (zero missing names AND zero unmatched members). The gate is computed
+    * on the driver — the frames [[run]] returns are local, so this collects
+    * without a job — and the gated map is broadcast into `votes`.
     */
   def applyMatches(votes: DataFrame, rollYearChamber: DataFrame, r: Result): DataFrame = {
-    val incompleteGroups = r.missingNames.select("year", "chamber")
-      .union(r.unmatchedMembers.select("year", "chamber")).distinct()
-    val gated = r.matches.join(incompleteGroups, Seq("year", "chamber"), "left_anti")
-      .select(col("year"), col("chamber"), col("name"),
-        col("member_id").as("_new_member_id"))
+    def groups(df: DataFrame) =
+      df.select("year", "chamber").collect().map(x => (x.getInt(0), x.getInt(1)))
+    val incomplete = (groups(r.missingNames) ++ groups(r.unmatchedMembers)).toSet
+    val byName = r.matches.select(col("year"), col("chamber"), col("name"),
+      col("member_id").as("_new_member_id"))
+    val gated = byName.collect().filterNot(x => incomplete((x.getInt(0), x.getInt(1))))
+    val gatedDf = votes.sparkSession.createDataFrame(gated.toSeq.asJava, byName.schema)
     votes.join(rollYearChamber, Seq("roll_id"), "left")
-      .join(gated, Seq("year", "chamber", "name"), "left")
+      .join(broadcast(gatedDf), Seq("year", "chamber", "name"), "left")
       .withColumn("member_id", coalesce(col("member_id"), col("_new_member_id")))
       .drop("_new_member_id", "year", "chamber")
   }

@@ -1,6 +1,10 @@
 package graft.votes
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import graft.SparkSpec
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** ER pipeline tests: blocked fuzzy pass + substring fixed point
   * (reference: match_names.py).
@@ -95,6 +99,22 @@ class MatchNamesSpec extends SparkSpec {
     val r = MatchNames.run(spark, namesDf("HARKINS", "BIZZ"), roster)
     val m = r.matches.collect().map(x => (x.getString(2), x.getLong(3), x.getString(4)))
     assert(m.contains(("BIZZ", 3L, "substring")))
+
+    // a pass-2 hit leaves both residues
+    val missing = r.missingNames.collect().map(_.getString(2)).toSet
+    val unmatched = r.unmatchedMembers.collect().map(_.getAs[Long]("member_id")).toSet
+    assert(!missing.contains("BIZZ"))
+    assert(!unmatched.contains(3L))
+
+    // and the residues equal their anti-join definitions over the matches
+    val keys = Seq("year", "chamber")
+    val refMissing = namesDf("HARKINS", "BIZZ")
+      .join(r.matches, keys :+ "name", "left_anti").collect().map(_.getString(2)).toSet
+    val refUnmatched = roster
+      .join(r.matches.select("year", "chamber", "member_id"), keys :+ "member_id", "left_anti")
+    assert(missing == refMissing)
+    assert(r.unmatchedMembers.schema == refUnmatched.schema)
+    assert(r.unmatchedMembers.collect().toSet == refUnmatched.collect().toSet)
   }
 
   test("applyMatches fills member ids only for fully-resolved groups") {
@@ -118,12 +138,36 @@ class MatchNamesSpec extends SparkSpec {
 
   test("ER join plan stays blocked (no cartesian product)") {
     val probes = namesDf("HARKINS", "MERSKI", "MIKE SMITH")
-    val plan = {
-      // reproduce pass-1 join shape and inspect the physical plan
-      val r = MatchNames.run(spark, probes, roster)
-      r.matches.queryExecution.executedPlan.toString
-    }
+    val plan = MatchNames.pass1(probes, roster).queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"),
       s"ER join degraded to cartesian product:\n$plan")
+  }
+
+  test("run + applyMatches stay within their job budget (pass 1 runs once)") {
+    // Measured at 12 jobs on this fixture: 5 for pass 1 (its shuffle
+    // stages and the collect), 2 per residue (broadcasting the local
+    // pass-1 rows, then the collect) and 3 for the caller's count. Reading
+    // the Result frames launches none. Re-running pass 1 for each residue
+    // and each Result frame, as a plan-valued Result did, launched 34.
+    val budget = 12
+    val votes = Seq(
+      (1L, 100L, "HARKINS", VoteCode.YEA, None: Option[Long]),
+      (1L, 100L, "BIZZ", VoteCode.NAY, None: Option[Long])
+    ).toDF("session_id", "roll_id", "name", "vote", "member_id")
+    val rollYc = Seq((100L, 2023, Chamber.HOUSE)).toDF("roll_id", "year", "chamber")
+    val names = namesDf("HARKINS", "BIZZ", "MIKE SMITH")
+
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = MatchNames.run(spark, names, roster)
+      MatchNames.applyMatches(votes, rollYc, r).count()
+      ListenerBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get() <= budget, s"${jobs.get()} jobs launched, budget $budget")
   }
 }
